@@ -11,6 +11,9 @@ Usage:
     python bench_extra.py --all              # every bench.py query
     python bench_extra.py --plans OUTDIR SUFFIX q1 q2 ...
                                              # also write OUTDIR/<q>_SUFFIX.txt
+    python bench_extra.py --scrub-passes [N_PAGES]
+                                             # scrub cost per pass and per
+                                             # compiled pattern, no Spark
 """
 
 from __future__ import annotations
@@ -58,7 +61,91 @@ def _rest(app_id: str, path: str):
     return json.load(urllib.request.urlopen(url, timeout=10))
 
 
+_SCRUB_PASSES = (
+    "_process_emails",
+    "_process_phones",
+    "_process_ssns",
+    "_process_credit_cards",
+    "_process_context_addresses",
+    "_process_special_addresses",
+    "_process_names",
+    "_process_standard_addresses",
+)
+
+
+def _scrub_layer(docs: list[str], rounds: int) -> dict:
+    """µs/doc of each ``Deidentifier.text`` pass as text() calls it, and of
+    a whole-text ``.sub`` with every compiled pattern, in this process.
+    Each round scrubs ``docs`` with a fresh engine (as each Arrow batch
+    gets one); every figure is the median over rounds. The pattern scans
+    run only in the first rounds that cover 1000 docs: on long pages the
+    unanchored country and city scans take milliseconds per doc."""
+    from statistics import median
+
+    from deidentify_spark.oracle import Deidentifier
+    from deidentify_spark.oracle import patterns as P
+
+    def timed_engine(ns: dict):
+        d = Deidentifier("scrub-passes-key")
+        for name in _SCRUB_PASSES:
+            def wrap(*a, _f=getattr(d, name), _n=name):
+                t0 = time.perf_counter_ns()
+                out = _f(*a)
+                ns[_n] += time.perf_counter_ns() - t0
+                return out
+
+            setattr(d, name, wrap)
+        return d
+
+    pattern_rounds = -(-1000 // len(docs))
+    per_round: dict[str, list[float]] = {}
+    for r in range(rounds):
+        ns = dict.fromkeys(_SCRUB_PASSES, 0)
+        d = timed_engine(ns)
+        t0 = time.perf_counter_ns()
+        for t in docs:
+            d.text(t)
+        ns["text"] = time.perf_counter_ns() - t0
+        for name, pat in vars(P).items():
+            if name.endswith("_RE") and r < pattern_rounds:
+                t0 = time.perf_counter_ns()
+                for t in docs:
+                    pat.sub(" ", t)
+                ns[name] = time.perf_counter_ns() - t0
+        for k, v in ns.items():
+            per_round.setdefault(k, []).append(v / len(docs) / 1e3)
+    us = {k: round(median(v), 2) for k, v in per_round.items()}
+    return {
+        "docs": len(docs),
+        "rounds": rounds,
+        "text_us_per_doc": us.pop("text"),
+        "passes_us_per_doc": {k.removeprefix("_process_"): us.pop(k) for k in _SCRUB_PASSES},
+        "patterns_us_per_doc": us,
+    }
+
+
+def scrub_passes(n_pages: int) -> None:
+    """Per-detector layer of the scrub (one process): the reference PII
+    corpus paragraphs and ``generate_pages`` page text."""
+    from deidentify_spark.functions.quality import QualityConfig
+    from deidentify_spark.sources.pages import make_doc
+
+    with open(os.path.join(_REPO, "fixtures", "pii_corpus.json")) as f:
+        paragraphs = json.load(f)["paragraphs"]
+    cfg = QualityConfig()
+    # make_doc is generate_pages' per-row function; seed 42 is its default
+    pages = [make_doc(42, i, cfg, False)["text"] for i in range(n_pages)]
+    out = {
+        "pii_corpus_paragraphs": _scrub_layer(paragraphs, rounds=200),
+        "generate_pages": _scrub_layer(pages, rounds=3),
+    }
+    print(json.dumps(out, indent=1))
+
+
 def main() -> None:
+    if sys.argv[1:2] == ["--scrub-passes"]:
+        scrub_passes(int(sys.argv[2]) if len(sys.argv) > 2 else 1000)
+        return
     import bench as bench_mod
     import __spark_entry__ as entry_mod
 

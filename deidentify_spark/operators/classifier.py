@@ -87,16 +87,20 @@ def _features(
     # lambda forced the gram projection into interpreted evaluation
     # (measured 3.07 s -> 0.34 s executor CPU for the sf0.1 corpus
     # gram explode; identical multiset in the identical order —
-    # unigrams then bigrams). NULL text: n_grams is NULL -> sequence
-    # NULL -> explode emits nothing, like the old concat-of-NULL form;
-    # a non-null text always splits to >= 1 word, so the sequence
-    # bound n_grams - 1 >= 0 never steps downward.
+    # unigrams then bigrams). NULL text (n_grams NULL) and an empty
+    # words array both take the empty-array branch, so explode emits
+    # nothing; the n_grams >= 1 guard (as perplexity.lm_train_tables
+    # guards n_slots) keeps sequence(0, -1) from stepping downward
+    # should tokenization ever yield zero words.
+    gram_idx = F.when(
+        n_grams >= 1, F.sequence(F.lit(0), n_grams - 1)
+    ).otherwise(F.array().cast("array<int>"))
     step = base.select(
         F.col(id_col),
         *extras,
         *counts,
         "_words",
-        F.explode(F.sequence(F.lit(0), n_grams - 1)).alias("_gi"),
+        F.explode(gram_idx).alias("_gi"),
     )
     gi = F.col("_gi")
     shingle = F.when(

@@ -11,6 +11,25 @@ function of (secret_key, data_type, original_value) — HMAC-SHA256 sliced into
 byte ranges and reduced mod pool size. The reference's mapping table
 (deidentify.go:37-41) is only a memoization cache, so the engine is stateless
 and embarrassingly parallel.
+
+The text scrub keeps the reference's output byte for byte but not all of
+its regex calls. Three exact fast paths carry most of the saving, each
+with its own parity test:
+
+* the email pass is an '@'-anchored linear scan (``_sub_emails``) instead
+  of ``EMAIL_RE.sub``, which backtracks super-linearly on dotted runs
+  (tests/test_oracle_properties.py::test_email_scan_matches_regex,
+  tests/test_oracle_perf.py::test_full_scrub_linear_on_dotted_email_near_miss);
+* ``is_address_context`` answers NAME_RE-shaped candidates with one
+  literal alternation plus a whole-token address-word check, memoized
+  per instance (test_address_context_fast_path_parity);
+* SPECIAL_ADDRESS_3, like the phone and digit-anchored address passes,
+  is matched only at its candidate starts (``_sub_anchored``;
+  tests/test_oracle.py::test_anchored_sub_parity).
+
+Two smaller ones ride along: the phone pass matches a stdlib-``re``
+compile of PHONE_PATTERN (test_phone_scan_matches_regex), and the SSN
+pass no longer re-scans the input for an SSN context it cannot use.
 """
 
 from __future__ import annotations
@@ -53,7 +72,12 @@ _DIGIT_RE = _regex.compile(r"[0-9]")
 #     token is followed by a mandatory non-digit) — so digit-run starts
 #     are a complete candidate set;
 #   * PHONE: the first consumed character is one of [+(0-9] (the optional
-#     `\+[0-9]{1,2}` prefix, the optional `\(`, or the first area digit).
+#     `\+[0-9]{1,2}` prefix, the optional `\(`, or the first area digit);
+#   * SPECIAL_ADDRESS_3: every match starts with its cue `:`, `@` or a
+#     case-insensitive `at` (no word boundary: "that 12 Main St" matches
+#     at "at"), followed by a whitespace run and then the number token's
+#     first digit. Under the regex module's simple case folding only
+#     A/a and T/t fold to `a`/`t`, so `[aA][tT]` is the complete cue set.
 # Leftmost/non-overlapping `.sub()` semantics are preserved by visiting
 # candidates in order and skipping those inside the previous match.
 # Equivalence is pinned by tests/test_oracle.py::test_anchored_sub_parity.
@@ -61,6 +85,11 @@ import re as _stdre
 
 _DIGIT_RUN_RE = _stdre.compile(r"[0-9]+")
 _PHONE_START_RE = _stdre.compile(r"[+(0-9]")
+# PHONE_PATTERN has no flags, lookarounds or Unicode classes, so stdlib re
+# backtracks through it exactly as the regex module does; its per-call
+# cost is lower, which counts here because every digit is a candidate.
+_PHONE_RE = _stdre.compile(P.PHONE_PATTERN)
+_ADDRESS_CUE_RE = _stdre.compile(r"(?:[:@]|[aA][tT])(?=[\t\n\f\r ]+[0-9])")
 
 
 def _sub_anchored(candidates_re, pat, repl, text: str) -> str:
@@ -85,6 +114,117 @@ def _sub_anchored(candidates_re, pat, repl, text: str) -> str:
         return text
     out.append(text[last:])
     return "".join(out)
+
+
+# Email pass as an '@'-anchored linear scan (perf-only, behavior-identical
+# to ``P.EMAIL_RE.sub``, which backtracks to ~n^2.3 on a long local-part
+# run that meets a dotted domain run with no valid TLD). In
+# `[L]+@[D]+\.[a-zA-Z]{2,}`, with L = [a-zA-Z0-9._%+-] ⊇ D = [a-zA-Z0-9.-]:
+#   * '@' is in neither class, so every match holds exactly one '@' and its
+#     local part is the whole L-run ending there, clipped at the previous
+#     match's end; all start positions in that run share the same fate, so
+#     the run's first position is the leftmost match start;
+#   * greedy `[D]+` backtracks from the end of the D-run after '@' to the
+#     rightmost '.' (at least one D char past '@') that is followed by two
+#     letters; `[a-zA-Z]{2,}` then takes the whole letter run.
+# Visiting '@'s left to right therefore yields `.sub()`'s leftmost-first,
+# non-overlapping matches. Pinned by
+# tests/test_oracle_properties.py::test_email_scan_matches_regex.
+_EMAIL_LOCAL_CHARS = (
+    "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789._%+-"
+)
+_EMAIL_DOMAIN_RUN_RE = _stdre.compile(r"[a-zA-Z0-9.-]*")
+_EMAIL_TLD_RE = _stdre.compile(r"[a-zA-Z]{2,}")
+
+
+def _sub_emails(repl, text: str) -> str:
+    """Equivalent of ``P.EMAIL_RE.sub(lambda m: repl(m.group(0)), text)``,
+    linear in ``len(text)``."""
+    out = None
+    last = 0  # end of the previous match
+    lo = 0  # no local part starts before here
+    at = text.find("@")
+    while at >= 0:
+        start = lo + len(text[lo:at].rstrip(_EMAIL_LOCAL_CHARS))
+        end = -1
+        if start < at:
+            run_end = _EMAIL_DOMAIN_RUN_RE.match(text, at + 1).end()
+            dot = text.rfind(".", at + 2, run_end)
+            while dot >= 0:
+                tld = _EMAIL_TLD_RE.match(text, dot + 1)
+                if tld is not None:
+                    end = tld.end()
+                    break
+                dot = text.rfind(".", at + 2, dot)
+        if end < 0:
+            lo = at + 1
+        else:
+            if out is None:
+                out = []
+            out.append(text[last:start])
+            out.append(repl(text[start:end]))
+            last = lo = end
+        at = text.find("@", lo)
+    if out is None:
+        return text
+    out.append(text[last:])
+    return "".join(out)
+
+
+# Address-context fast path (perf-only, behavior-identical). Every name
+# candidate is a NAME_RE match, an ASCII `[A-Z][a-z]+ [A-Z][a-z]+`. On
+# that shape the four (?i) searches of is_address_context reduce to:
+#   * ADDRESS_WORD (ASCII word boundaries): one of the two lowercased
+#     tokens IS an address word ('Straße' cannot occur);
+#   * INTERNATIONAL_ADDRESS / COUNTRY_NAME / CITY (unanchored): one of
+#     their alternatives occurs in the lowercased candidate. A `[\s]+`
+#     can only meet the single space; alternatives that need a '.' or a
+#     non-ASCII letter can never match and are dropped.
+# On an ASCII subject, (?i) matching of ASCII letters is plain ASCII
+# case-insensitive comparison, so lowercasing both sides is exact. Pinned by
+# tests/test_oracle_properties.py::test_address_context_fast_path_parity.
+_NAME_SHAPE_RE = _stdre.compile(r"[A-Z][a-z]+ [A-Z][a-z]+")
+
+
+def _context_literals(body: str) -> set[str]:
+    """Lowercased alternatives of a ``(a|b|…)`` pattern body that an
+    ASCII-letter-and-space subject can contain."""
+    out = set()
+    for alt in body[1:-1].split("|"):
+        alt = alt.replace(f"[{P._WS}]+", " ")
+        if alt.isascii() and alt.replace(" ", "").isalpha():
+            out.add(alt.lower())
+    return out
+
+
+_ADDRESS_WORD_TOKENS = _context_literals(f"({P._ADDRESS_WORDS})")
+_ADDRESS_CONTEXT_RE = _stdre.compile(
+    "|".join(
+        sorted(
+            _context_literals(P._INTERNATIONAL_BODY)
+            | _context_literals(P._COUNTRY_BODY)
+            | _context_literals(P._CITY_BODY)
+        )
+    )
+)
+
+
+def _is_address_context(name: str) -> bool:
+    if _NAME_SHAPE_RE.fullmatch(name):
+        low = name.lower()
+        first, last = low.split(" ")
+        return (
+            first in _ADDRESS_WORD_TOKENS
+            or last in _ADDRESS_WORD_TOKENS
+            or _ADDRESS_CONTEXT_RE.search(low) is not None
+        )
+    return bool(
+        P.ADDRESS_WORD_RE.search(name)
+        or P.INTERNATIONAL_ADDRESS_RE.search(name)
+        or P.COUNTRY_NAME_RE.search(name)
+        or P.CITY_RE.search(name)
+    )
+
 
 ALL_TYPES = (
     TYPE_NAME,
@@ -133,15 +273,19 @@ class Deidentifier:
     ``_memo`` mirrors the reference's mapping table
     (deidentify.go:37-41, 466-474, 855-863) — a pure per-instance
     memoization cache keyed (column, original); it never changes output.
+    ``_address_context`` likewise memoizes ``is_address_context`` per
+    name candidate.
     """
 
     def __init__(self, secret_key: str) -> None:
         self._key = secret_key.encode("utf-8")
         self._memo: dict[str, dict[str, str]] = {}
+        self._address_context: dict[str, bool] = {}
 
     def clear_mappings(self) -> None:
-        """Reset the memo cache (deidentify.go:133-137)."""
+        """Reset the memo caches (deidentify.go:133-137)."""
         self._memo = {}
+        self._address_context = {}
 
     # --- hashing -------------------------------------------------------
 
@@ -308,14 +452,14 @@ class Deidentifier:
         return result
 
     def _process_emails(self, text: str) -> str:
-        return P.EMAIL_RE.sub(
-            lambda m: self.deidentify_value(m.group(0), TYPE_EMAIL, "email"), text
+        return _sub_emails(
+            lambda email: self.deidentify_value(email, TYPE_EMAIL, "email"), text
         )
 
     def _process_phones(self, text: str) -> str:
         return _sub_anchored(
             _PHONE_START_RE,
-            P.PHONE_RE,
+            _PHONE_RE,
             lambda m: self.deidentify_value(m.group(0), TYPE_PHONE, "phone"),
             text,
         )
@@ -326,19 +470,19 @@ class Deidentifier:
         (deidentify.go:226); since any regex match strips to exactly 9
         digits the gate is inert, replicated for fidelity."""
 
-        # Context depends only on the original input, not the match —
-        # hoisted out of the per-match callback (the reference re-scans per
-        # match, deidentify.go:755, which is O(matches x len); hoisting is
-        # behavior-identical and linear).
-        has_context = bool(P.SSN_CONTEXT_RE.search(original_text))
-
         def repl(m):
             ssn = m.group(0)
             raw_digits = P.NON_DIGIT_RE.sub("", ssn)
             is_formatted = bool(
                 P.SSN_HYPHEN_RE.search(ssn) or P.SSN_SPACE_RE.search(ssn)
             )
-            if not is_formatted and not has_context and len(raw_digits) != 9:
+            # the context scan of the original text (deidentify.go:755)
+            # goes last: every SSN_RE match holds 9 digits, so it never runs
+            if (
+                not is_formatted
+                and len(raw_digits) != 9
+                and not P.SSN_CONTEXT_RE.search(original_text)
+            ):
                 return ssn
             return self.deidentify_value(ssn, TYPE_SSN, "ssn")
 
@@ -386,16 +530,14 @@ class Deidentifier:
             addr = parts[1].strip()
             return parts[0] + " " + self.deidentify_value(addr, TYPE_ADDRESS, "address")
 
-        return P.SPECIAL_ADDRESS_3_RE.sub(repl3, text)
+        return _sub_anchored(_ADDRESS_CUE_RE, P.SPECIAL_ADDRESS_3_RE, repl3, text)
 
     def is_address_context(self, name: str) -> bool:
         """Name-candidate suppression (deidentify.go:537-547)."""
-        return bool(
-            P.ADDRESS_WORD_RE.search(name)
-            or P.INTERNATIONAL_ADDRESS_RE.search(name)
-            or P.COUNTRY_NAME_RE.search(name)
-            or P.CITY_RE.search(name)
-        )
+        hit = self._address_context.get(name)
+        if hit is None:
+            hit = self._address_context[name] = _is_address_context(name)
+        return hit
 
     def _process_names(self, text: str) -> str:
         def repl(m):

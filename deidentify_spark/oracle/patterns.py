@@ -18,6 +18,30 @@ scopes it from-position; all composed components are uniformly (?i), so
 hoisting is behavior-identical). All patterns are compiled once at import
 (the reference recompiles per call — deidentify.go:631 etc.; compiling once
 is behavior-neutral and required for UDF throughput).
+
+``Deidentifier.text`` (oracle/core.py) does not run every pattern as a
+plain ``.sub``. Three exact fast paths stand in for them, each built from
+the constants here and pinned against the pattern it replaces:
+
+* ``EMAIL_RE`` -> an '@'-anchored linear scan (``core._sub_emails``);
+  tests/test_oracle_properties.py::test_email_scan_matches_regex and the
+  doubling guard in tests/test_oracle_perf.py.
+* ``ADDRESS_WORD_RE`` / ``INTERNATIONAL_ADDRESS_RE`` / ``COUNTRY_NAME_RE``
+  / ``CITY_RE`` in ``is_address_context`` -> one stdlib-``re`` literal
+  alternation over the alternatives of ``_INTERNATIONAL_BODY``,
+  ``_COUNTRY_BODY`` and ``_CITY_BODY`` plus a whole-token
+  ``_ADDRESS_WORDS`` check, for NAME_RE-shaped candidates;
+  tests/test_oracle_properties.py::test_address_context_fast_path_parity.
+* ``SPECIAL_ADDRESS_3_RE`` (like PHONE_RE and the digit-anchored address
+  patterns) -> anchored ``.match`` at candidate starts only;
+  tests/test_oracle.py::test_anchored_sub_parity and
+  tests/test_oracle_properties.py::test_address_cue_scan_matches_regex.
+
+``PHONE_PATTERN`` is also compiled with stdlib ``re`` for that anchored
+scan (tests/test_oracle_properties.py::test_phone_scan_matches_regex).
+
+Editing a pattern here re-derives the fast paths at import; the parity
+tests above then check the result.
 """
 
 import regex
@@ -67,12 +91,13 @@ _ADDRESS_WORDS = (
 # in RE2 is irrelevant here (patterns.go:25).
 ADDRESS_WORD_PATTERN = rf"(?i){_WB_L}({_ADDRESS_WORDS}|Straße){_WB_R}"
 
-INTERNATIONAL_ADDRESS_PATTERN = (
-    "(?i)(street|avenue|road|lane|drive|boulevard|blvd|way|plaza|square|court|"
+_INTERNATIONAL_BODY = (
+    "(street|avenue|road|lane|drive|boulevard|blvd|way|plaza|square|court|"
     "terrace|place|circle|alley|row|highway|parkway|path|trail|crescent|rue|"
     "strasse|straße|calle|via|viale|avenida|carrer|straat|gasse|weg|camino|"
     "ulica|utca|prospekt|dori|jalan|marg|dao|jie|lu)"
 )
+INTERNATIONAL_ADDRESS_PATTERN = f"(?i){_INTERNATIONAL_BODY}"
 
 # Country list body (no flag prefix; composed below). \s+ -> [\t\n\f\r ]+.
 _COUNTRY_BODY = (

@@ -491,6 +491,16 @@ def test_anchored_sub_parity(corpus):
         "+99 999 999 9999 done",
         "9" * 4000,
         "+1 5551234567+2 4445556666",
+        "that 12 Main St",
+        "AT  9 Rue X",
+        "AT  9 Grand Rue",
+        ":\t7 Elm Rd",
+        "@ 1 Via Roma",
+        "cat 5 Elm Street at 6 Pine Rd",
+        "at 12at 3 Main St",
+        ":: @\n\n4 Oak Lane, Calle Mayor Avenida",
+        "aT" + " " * 300 + "8 Elm Rd",
+        "at " * 100 + "1 ",
     ]
     repl = lambda m: "<X>"  # noqa: E731
     digit_pats = (P.SPECIAL_ADDRESS_1_RE, P.SPECIAL_ADDRESS_2_RE, P.ADDRESS_RE)
@@ -500,5 +510,8 @@ def test_anchored_sub_parity(corpus):
                 repl, text
             ), text[:80]
         assert C._sub_anchored(
-            C._PHONE_START_RE, P.PHONE_RE, repl, text
+            C._PHONE_START_RE, C._PHONE_RE, repl, text
         ) == P.PHONE_RE.sub(repl, text), text[:80]
+        assert C._sub_anchored(
+            C._ADDRESS_CUE_RE, P.SPECIAL_ADDRESS_3_RE, repl, text
+        ) == P.SPECIAL_ADDRESS_3_RE.sub(repl, text), text[:80]

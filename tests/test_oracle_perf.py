@@ -36,3 +36,33 @@ def test_full_scrub_word_chain_bounded():
     d = Deidentifier("perf-key")
     words = "123 " + " ".join(["lorem", "ipsum", "dolor", "sit"] * 500) + " endx."
     assert _timed(d.text, words) < 5.0
+
+
+def _best_of_3(fn, arg):
+    return min(_timed(fn, arg) for _ in range(3))
+
+
+def _doubling_ratio(fn, make, k=64):
+    """time(make(2k)) / time(make(k)), min-of-3 each, for the first
+    power-of-two ``k`` whose smaller input takes at least 5 ms."""
+    while True:
+        t_small = _best_of_3(fn, make(k))
+        if t_small >= 0.005:
+            return _best_of_3(fn, make(2 * k)) / t_small
+        k *= 2
+
+
+def test_full_scrub_linear_on_dotted_email_near_miss():
+    # a long local-part run meeting a dotted domain run with no valid
+    # TLD: EMAIL_RE.sub backtracks to ~n^2.3 here; the '@'-anchored scan
+    # in core._sub_emails is linear
+    d = Deidentifier("perf-key")
+    ratio = _doubling_ratio(d.text, lambda k: "a." * k + "@" + "b." * k)
+    assert ratio < 3.0, ratio
+
+
+def test_full_scrub_linear_on_address_cue_run():
+    # every "at " is a SPECIAL_ADDRESS_3 cue; only the last meets a digit
+    d = Deidentifier("perf-key")
+    ratio = _doubling_ratio(d.text, lambda k: "at " * k + "1 ")
+    assert ratio < 3.0, ratio
